@@ -182,8 +182,8 @@ def cluster_safe_split(
 
 
 def ngram_decontaminate(
-    df,
-    eval_df,
+    df: DataFrame,
+    eval_df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,

@@ -741,6 +741,9 @@ def readability_scores(
     rows with zero words drop.  A single narrow codegen'd projection —
     no shuffle, no UDF.
     """
+    missing = [c for c in (*keep_cols, text_col) if c not in df.columns]
+    if missing:
+        raise ValueError(f"readability_scores: input lacks columns {missing}")
     counts = df.select(
         *keep_cols,
         F.size(tokens(F.col(text_col))).cast("bigint").alias("n_words"),
@@ -778,6 +781,11 @@ def vocab_coverage(
     slice comes from a distributed TakeOrdered, the rank window runs on
     that slice only, and the grand total is a 1-row broadcast."""
     from pyspark.sql.window import Window
+
+    if not ks or any((not isinstance(k, int)) or k <= 0 for k in ks):
+        raise ValueError(f"vocab_coverage: ks must be positive ints, got {ks!r}")
+    if text_col not in df.columns:
+        raise ValueError(f"vocab_coverage: input lacks column {text_col!r}")
 
     uni = (
         df.select(F.explode(tokens(F.col(text_col))).alias("term"))

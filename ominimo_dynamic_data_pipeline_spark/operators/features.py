@@ -496,6 +496,11 @@ def rfm_segments(
         exact_str_double,
     )
 
+    if not isinstance(n_buckets, int) or n_buckets < 2:
+        raise ValueError(
+            f"rfm_segments: n_buckets must be an int >= 2, got {n_buckets!r}"
+        )
+
     cents_row = F.round(F.col(value_col) * 100, 0).cast("bigint")
     # TIMESTAMP_NTZ sources (the pipeline reader keeps them) must cast
     # to TIMESTAMP for unix_micros; under the session's pinned UTC the

@@ -21,7 +21,9 @@ alone cannot fix:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -219,7 +221,7 @@ def morton_key_sql(a: str, b: str, bits: int = 16) -> str:
 
 def distributed_row_number(
     df: DataFrame,
-    order_by,
+    order_by: Sequence[Column],
     rn_col: str = "rn",
     num_partitions: int | None = None,
 ):
@@ -258,11 +260,16 @@ def distributed_row_number(
     """
     from pyspark.sql.types import LongType, StructField, StructType
 
+    order_by = list(order_by)
+    if not order_by:
+        raise ValueError(
+            "distributed_row_number: order_by must be a non-empty list of "
+            "sort expressions defining a total order"
+        )
     spark = df.sparkSession
     n = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "200")
     )
-    order_by = list(order_by)
     pid_col = "__drn_pid"
     ordered = (
         df.repartitionByRange(n, *order_by)
@@ -306,7 +313,7 @@ def distributed_row_number(
 def distributed_ntile(
     df: DataFrame,
     n_buckets: int,
-    order_by,
+    order_by: Sequence[Column],
     out_col: str = "bucket",
     num_partitions: int | None = None,
 ) -> DataFrame:

@@ -100,16 +100,16 @@ _DEFAULTS: dict[str, str] = {
     ),
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
     # Round-11 measured pass on q141's watermark-eviction residual
-    # (tools/exp_q141_eviction.py, sf100 multi-file, cold process per
-    # variant, result fingerprints identical): larger memtables (fewer
-    # L0 SSTs for the expiry scan's merge iterator) + a real block cache
-    # (default is 8 MB) take q141 110.7 -> 84.4 s wall, state update
-    # 1792 -> 1250 task-s, watermark removal 505 -> 365 task-s (-28%).
-    # Both are storage-layout/cache-only (result-neutral) and inert on
-    # the heap provider.  Memory bound: budgets apply per OPEN store and
-    # only task-active stores are open, so worst-case extra is
-    # ~(128*4 + 64) MB x executor cores — pair with
-    # rocksdb.boundedMemoryUsage on memory-constrained executors.
+    # (BENCH_sf100.json round11_q141_eviction_knobs: sf100 multi-file, cold
+    # process per variant, result fingerprints identical): larger memtables
+    # (fewer L0 SSTs for the expiry scan's merge iterator) + a real block
+    # cache (default is 8 MB) take q141 110.7 -> 84.4 s wall, state update
+    # 1792 -> 1250 task-s, watermark removal 505 -> 365 task-s (-28%). Both
+    # are storage-layout/cache-only (result-neutral) and inert on the heap
+    # provider.  Memory bound: budgets apply per OPEN store and only
+    # task-active stores are open, so worst-case extra is ~(128*4 + 64) MB x
+    # executor cores — pair with rocksdb.boundedMemoryUsage on
+    # memory-constrained executors.
     "spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB": "128",
     "spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber": "4",
     "spark.sql.streaming.stateStore.rocksdb.blockCacheSizeMB": "64",
@@ -230,7 +230,9 @@ def auto_state_store(source_bytes: int) -> str | None:
     )
 
 
-def _driver_memory_gb(input_bytes: int | None = None) -> int:
+def _driver_memory_gb(
+    input_bytes: int | None = None, host_ram_bytes: int | None = None
+) -> int:
     """24g base target (768 MB per local thread on the 32-core harness),
     clamped to half of physical RAM and floored at 4g, so hosts smaller
     than the harness degrade to Spark's own spilling inside a heap the
@@ -245,10 +247,14 @@ def _driver_memory_gb(input_bytes: int | None = None) -> int:
     (12 GB, 180M rows) ran at 24g = 2x input, so 3x carries measured
     headroom.  Local-mode only: one JVM hosts the driver and all 32
     executor threads; a real cluster sizes executor memory per core
-    instead."""
+    instead.  ``host_ram_bytes`` defaults to the physical RAM of this
+    host."""
     try:
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        half_gb = int(total / (1 << 30) / 2)
+        if host_ram_bytes is None:
+            host_ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf(
+                "SC_PHYS_PAGES"
+            )
+        half_gb = int(host_ram_bytes / (1 << 30) / 2)
     except (ValueError, OSError, AttributeError):
         half_gb = 24
     base = max(4, min(24, half_gb))

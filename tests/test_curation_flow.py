@@ -268,7 +268,7 @@ def test_incremental_dedup_step_drops_known_and_batch_dupes(spark):
     assert sorted(r["doc_id"] for r in ctx2.frames["fresh"].collect()) == [11, 13]
 
     # missing reference is a hard error, not a silent full-batch pass
-    with pytest.raises(ValueError, match="requires params.reference"):
+    with pytest.raises(ValueError, match="requires params \\['reference'\\]"):
         bad = {**flow, "transformations": [
             {"name": "fresh", "type": "incremental_dedup",
              "params": {"input": "batch"}}]}
@@ -1277,7 +1277,7 @@ def test_cluster_canonical_chain_from_metadata(spark):
     }
     assert got == want
 
-    with pytest.raises(ValueError, match="requires params.docs"):
+    with pytest.raises(ValueError, match="requires params \\['docs'\\]"):
         compile_dataflow(
             spark,
             {
@@ -1645,3 +1645,122 @@ def test_sort_step_honors_desc_and_nulls(spark):
          "params": {"input": "src", "by": ["v DESC NULLS LAST", "id ASC"]}},
     )
     assert [r["id"] for r in ctx.get("out").collect()] == [2, 4, 1, 3]
+
+
+def _placeholder(hint):
+    """A metadata value of the kind ``hint`` asks for ("f" names a frame)."""
+    import typing
+    from types import NoneType, UnionType
+
+    from pyspark.sql import Column, DataFrame
+
+    if typing.get_origin(hint) in (UnionType, typing.Union):
+        hint = next(a for a in typing.get_args(hint) if a is not NoneType)
+    if hint is DataFrame:
+        return "f"
+    if typing.get_args(hint) == (DataFrame,):
+        return ["f"]
+    return {int: 2, float: 0.5, bool: True, Column: "true", str: "x"}.get(
+        hint, ["x"]
+    )
+
+
+def test_binder_defaults_match_operator_signatures(spark):
+    """Every value a bound step takes by default is its operator's own
+    signature default, unless BINDINGS declares the difference (with a
+    reason) — so metadata defaults live in one place."""
+    import inspect
+
+    from ominimo_dynamic_data_pipeline_spark.operators.registry import (
+        _UNSET,
+        BINDINGS,
+        CompileContext,
+        Declared,
+    )
+
+    ctx = CompileContext(spark, frames={"f": spark.range(1)})
+    for op, b in BINDINGS.items():
+        given = {}  # exactly the keys the step must state
+        for name, p in b.signature.parameters.items():
+            key = b.keys[name]
+            d = b.declared.get(key, Declared("none"))
+            if key == "input" or d.required or (
+                p.default is inspect.Parameter.empty
+                and d.default is _UNSET
+                and d.context is None
+            ):
+                given[key] = _placeholder(b.hints[name])
+        kwargs = b.kwargs(ctx, {"name": op, "params": given})
+        for name, p in b.signature.parameters.items():
+            key = b.keys[name]
+            d = b.declared.get(key)
+            if key in given or (d is not None and d.context):
+                continue
+            if kwargs[name] != p.default:
+                assert d is not None and d.reason, (
+                    f"{op}.{name} defaults to {kwargs[name]!r} on the metadata "
+                    f"surface but {p.default!r} in the signature, undeclared"
+                )
+                assert kwargs[name] == d.default, (op, name)
+        for key, d in b.declared.items():
+            assert d.reason, (op, key)
+
+
+def test_bound_operators_have_fully_annotated_signatures():
+    """The binder coerces from annotations, so every operator behind a
+    binding must resolve a complete set of type hints."""
+    from ominimo_dynamic_data_pipeline_spark.operators.registry import (
+        BINDINGS,
+        OPERATORS,
+    )
+
+    for op, b in BINDINGS.items():
+        assert op in OPERATORS
+        unannotated = [n for n in b.signature.parameters if n not in b.hints]
+        assert not unannotated, (op, b.target, unannotated)
+
+
+def test_bound_step_rejects_misspelled_key(spark):
+    """A misspelled scalar key is a compile-time error naming the key,
+    never a silent run at the default."""
+    from ominimo_dynamic_data_pipeline_spark.operators.registry import (
+        OPERATORS,
+        CompileContext,
+    )
+
+    ctx = CompileContext(spark, register_views=False)
+    ctx.put("docs", spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string"))
+    with pytest.raises(ValueError, match=r"near_dup_pairs .*\['treshold'\]"):
+        OPERATORS["near_dup_pairs"](
+            ctx, {"name": "p", "params": {"input": "docs", "treshold": 0.9}}
+        )
+
+
+def test_near_dedup_step_quotes_backticked_text_column(spark):
+    """Caller-supplied identifiers reach rendered SQL quoted: a text
+    column named te`xt dedups exactly like one named text."""
+    from ominimo_dynamic_data_pipeline_spark.operators.registry import (
+        CompileContext,
+        apply_transformations,
+    )
+
+    plain = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy dog today"),
+            (3, "entirely different words make up this other sentence"),
+        ],
+        "doc_id bigint, text string",
+    )
+
+    def survivors(df, text_col):
+        ctx = CompileContext(spark, frames={"docs": df}, register_views=False)
+        apply_transformations(ctx, {"transformations": [
+            {"name": "out", "type": "near_dedup",
+             "params": {"input": "docs", "text_col": text_col}},
+        ]})
+        return sorted(r["doc_id"] for r in ctx.frames["out"].collect())
+
+    want = survivors(plain, "text")
+    assert want == [1, 3]
+    assert survivors(plain.withColumnRenamed("text", "te`xt"), "te`xt") == want

@@ -92,14 +92,29 @@ def test_batch_gc_posture_pinned():
 def test_driver_memory_scales_with_input():
     from ominimo_dynamic_data_pipeline_spark.session import _driver_memory_gb
 
+    # the measured rule, pinned on an injected harness-sized host (the
+    # sf100 soak ran with 125 GB RAM) so it holds on any test machine
+    big = 128 * GB
     # base behavior unchanged without an estimate
-    assert _driver_memory_gb() <= 24
+    assert _driver_memory_gb(host_ram_bytes=big) == 24
     # measured wall: 16 GB lineitem-dominated input OOMed the 24g heap
     # mid shuffle-write (q199 sf100) at any width; the measured 45g
     # (~3x input, see session.py/_driver_memory_gb) clears it
-    assert _driver_memory_gb(15_959_453_514) >= 45
+    assert _driver_memory_gb(15_959_453_514, host_ram_bytes=big) >= 45
     # miniature inputs stay at the 24g base (no pointless giant heaps)
-    assert _driver_memory_gb(40 << 20) == _driver_memory_gb()
+    assert _driver_memory_gb(40 << 20, host_ram_bytes=big) == 24
+
+
+def test_driver_memory_clamps_to_half_of_host_ram():
+    from ominimo_dynamic_data_pipeline_spark.session import _driver_memory_gb
+
+    # a 15 GB host can back at most half its RAM as heap, however large
+    # the input; the 4g floor still holds
+    small = 15 * GB
+    for input_bytes in (None, 40 << 20, 15_959_453_514):
+        heap = _driver_memory_gb(input_bytes, host_ram_bytes=small)
+        assert 4 <= heap <= 7.5
+    assert _driver_memory_gb(host_ram_bytes=2 * GB) == 4
 
 
 def test_extra_conf_merges_java_options_instead_of_replacing():
@@ -161,16 +176,16 @@ def test_scan_split_scales_with_input():
         cur = auto_max_partition_bytes(b, cpus=32)
         assert prev <= cur <= 128 * MB
         prev = cur
-    # round-10 multi-file validation (tools/exp_multifile_split.py,
-    # BENCH_sf100.json): the same 14 GB lineitem as 64 files scans in
-    # 7.85 / 6.16 / 6.33 s at 4 / 34(auto) / 128 MB splits — the split
-    # setting is ~irrelevant when per-file footers are small, so the
-    # size-keyed rule CANNOT harmfully over-split a multi-file lake and
-    # needs no layout branch.  (Single-file control: 317.9 / 46.9 /
-    # 19.1 s — the footer wall lives in the layout, and the writer's
-    # default multi-file output is the at-scale fix.)  The rule stays a
-    # pure function of (input_bytes, cpus): pinned by re-asserting the
-    # sf100 value the experiment ran at.
+    # round-10 multi-file validation (BENCH_sf100.json
+    # round10_multifile_split_validation): the same 14 GB lineitem as 64
+    # files scans in 7.85 / 6.16 / 6.33 s at 4 / 34(auto) / 128 MB splits —
+    # the split setting is ~irrelevant when per-file footers are small, so
+    # the size-keyed rule CANNOT harmfully over-split a multi-file lake and
+    # needs no layout branch.  (Single-file control: 317.9 / 46.9 / 19.1 s —
+    # the footer wall lives in the layout, and the writer's default
+    # multi-file output is the at-scale fix.)  The rule stays a pure
+    # function of (input_bytes, cpus): pinned by re-asserting the sf100
+    # value the experiment ran at.
     assert 32 * MB <= auto_max_partition_bytes(18 << 30, cpus=32) <= 40 * MB
 
 

@@ -1,10 +1,11 @@
 """Re-layout the sf100 soak tables as ~64-file parquet directories.
 
-Round-10 item: the single-file testdata layout overstates scan cost ~3x
-even at the best split setting (tools/exp_multifile_split.py measured a
-64-file lineitem at 7.9/6.2/6.3 s across 4/34/128 MB splits vs
-317.9/46.9/19.1 s for the single 14 GB file — the footer/rowgroup
-decode is a per-file serial wall that real multi-file lakes never hit).
+Round-10 item: the single-file testdata layout overstates scan cost ~3x even
+at the best split setting (BENCH_sf100.json
+round10_multifile_split_validation measured a 64-file lineitem at
+7.9/6.2/6.3 s across 4/34/128 MB splits vs 317.9/46.9/19.1 s for the single
+14 GB file — the footer/rowgroup decode is a per-file serial wall that real
+multi-file lakes never hit).
 A 100 TB lake is ALWAYS multi-file, so the heavy-tail envelope should
 be stamped on the representative layout; this script rewrites each
 sf100 table into ``testdata_sf100_mf/<table>.parquet/`` as a 64-file
