@@ -27,6 +27,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round_cutoff,
+    duck_round_expr,
+)
 from ominimo_dynamic_data_pipeline_spark.llm.text import normalize_text, tokens
 
 
@@ -39,22 +43,6 @@ MINHASH_PRIME = 1073741789  # largest prime < 2^30
 # the operators repeatedly cannot accumulate cached partitions until
 # GC/session teardown (round-5 advice).
 _PERSISTED: dict[str, list[DataFrame]] = {}
-
-
-def _dre():
-    """similarity.duck_round_expr via a call-time import: dedup is a
-    similarity dependency, so the module edge must point the other way.
-    Any double rounding that must hash-match a DuckDB ROUND routes
-    through it (F.round's BigDecimal HALF_UP diverges on boundary
-    doubles).  At d=0 the two are provably identical, so either spelling
-    is correct there — the query catalog uses duck_round_expr uniformly
-    for oracle-matched outputs, while purely-internal integer
-    quantizations may keep F.round."""
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        duck_round_expr,
-    )
-
-    return duck_round_expr
 
 
 def _persist_tracked(op: str, *frames: DataFrame):
@@ -1518,7 +1506,7 @@ def novelty_scores(
         )
         .withColumn(
             "novelty_frac",
-            _dre()(F.col("n_novel") / F.col("n_shingles"), 6),
+            duck_round_expr(F.col("n_novel") / F.col("n_shingles"), 6),
         )
     )
 
@@ -1721,10 +1709,6 @@ def containment_scores(
         .withColumn("_nu", F.col("_na") + F.col("_nb") - F.col("_inter"))
     )
     if min_containment is not None:
-        from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-            duck_round_cutoff,
-        )
-
         cut = duck_round_cutoff(min_containment, 6)
         staged = staged.filter(
             F.greatest(
@@ -1736,7 +1720,7 @@ def containment_scores(
     return staged.select(
         "id_a",
         "id_b",
-        _dre()(F.col("_inter") / F.col("_na"), 6).alias("containment_a"),
-        _dre()(F.col("_inter") / F.col("_nb"), 6).alias("containment_b"),
-        _dre()(F.col("_inter") / F.col("_nu"), 6).alias("jaccard"),
+        duck_round_expr(F.col("_inter") / F.col("_na"), 6).alias("containment_a"),
+        duck_round_expr(F.col("_inter") / F.col("_nb"), 6).alias("containment_b"),
+        duck_round_expr(F.col("_inter") / F.col("_nu"), 6).alias("jaccard"),
     )

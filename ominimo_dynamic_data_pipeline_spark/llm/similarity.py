@@ -19,10 +19,14 @@ from __future__ import annotations
 
 import functools
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round,
+    duck_round_expr,
+)
 from ominimo_dynamic_data_pipeline_spark.llm.dedup import dot_double, norm_frame
 
 # Ceiling for size-scaled inverted-list counts (scaled_k_lists): bounds the
@@ -1345,191 +1349,6 @@ def rrf_fuse(
             F.row_number().over(w).cast("bigint").alias("fused_rank"),
         )
     )
-
-
-def duck_round(x: float, d: int) -> float:
-    """DuckDB's ROUND(double, d) exactly: std::round(x * 10^d) / 10^d —
-    multiply FIRST (whose own double rounding can land exactly on .5),
-    then half away from zero.  Spark's F.round instead goes through
-    BigDecimal.valueOf's shortest-decimal-string semantics, and the two
-    diverge on boundary doubles (the round-9 sf1 sweep caught an
-    mmr_score where the multiply crossed the half: 0.4146 vs 0.4147) —
-    any value that must hash-match a DuckDB ROUND must use THIS."""
-    import math as _math
-
-    p = 10.0 ** d
-    v = x * p
-    f = float(_math.floor(v))
-    frac = v - f
-    if frac > 0.5 or (frac == 0.5 and v > 0.0):
-        f += 1.0
-    return f / p
-
-
-def duck_round_cutoff(threshold: float, d: int) -> float:
-    """Smallest non-negative double x with duck_round(x, d) >= threshold.
-
-    duck_round(., d) is monotone non-decreasing, so
-    {x : duck_round(x, d) >= t} is exactly {x >= cutoff} — filtering the
-    RAW score with this cutoff selects precisely the rows whose ROUNDED
-    score clears the threshold.  That matters for plans: a filter on a
-    rounded column gets predicate-pushed below the rounding projection,
-    and pushdown substitutes the full rounding expression (which
-    references its argument ~10x — see duck_round_expr's contract) into
-    the join condition.  Filtering the raw value keeps the pushed
-    predicate one-copy cheap; the projection above rounds once for the
-    survivors.  Bisection runs on the raw IEEE bit ordering (valid for
-    non-negative doubles), so the cutoff is exact to the ULP.
-    Scores here (jaccard/containment/cosine-with-threshold) are
-    non-negative by construction; assert rather than guess otherwise.
-    """
-    import struct
-
-    if threshold <= 0.0:
-        # every non-negative score rounds to >= a non-positive threshold,
-        # so the cutoff filter degenerates to "keep all" — returning 0.0
-        # preserves the pre-round-11 behavior of threshold=0.0 callers
-        # (containment_scores/near_dups kept all non-null pairs) instead
-        # of asserting (round-11 ADVICE)
-        return 0.0
-    bits = lambda x: struct.unpack("<q", struct.pack("<d", x))[0]
-    unbits = lambda b: struct.unpack("<d", struct.pack("<q", b))[0]
-    lo, hi = 0.0, float(threshold) + 10.0 ** (-d)
-    if duck_round(lo, d) >= threshold:
-        return lo
-    assert duck_round(hi, d) >= threshold
-    lo_b, hi_b = bits(lo), bits(hi)
-    while hi_b - lo_b > 1:
-        mid_b = (lo_b + hi_b) // 2
-        if duck_round(unbits(mid_b), d) >= threshold:
-            hi_b = mid_b
-        else:
-            lo_b = mid_b
-    return unbits(hi_b)
-
-
-def duck_round_expr(col: Column | str, d: int = 0) -> Column:
-    """`duck_round` as a pure-JVM Column expression — DuckDB's
-    ROUND(double, d) bit-exactly, inside whole-stage codegen (no UDF,
-    no Arrow hop).
-
-    Why it is exact: with v = x * 10^d (the same IEEE multiply DuckDB
-    performs), `v - floor(v)` is computed EXACTLY in doubles — for
-    |v| >= 1 Sterbenz's lemma applies (floor(v) is within [v/2, 2v]),
-    and for |v| < 1 floor(v) is 0 or -1, both exact — so the
-    half-away-from-zero tie test below sees the true fractional part,
-    matching std::round(v) for every finite double with |v| < 2^52.
-    For |v| >= 2^52, v is already integral and std::round(v) == v, so
-    the result is v / 10^d; that branch also keeps F.floor's LongType
-    from overflowing.  NaN passes through (DuckDB: round(NaN) = NaN),
-    and NULL propagates through the arithmetic.
-
-    Use this, not F.round, for any final double that must hash-match a
-    DuckDB `ROUND(double, d)` oracle: F.round goes through
-    BigDecimal.valueOf's shortest-decimal-string HALF_UP and diverges
-    from DuckDB on boundary doubles (the round-9 sf1 sweep caught one).
-
-    CHEAP-ARGUMENT CONTRACT: the rounding logic references its input
-    ~10 times (frac, tie test, NaN/2^52 guards); Catalyst inlines every
-    reference and codegen does not CSE across `when` branches, so the
-    argument is re-evaluated up to 10x per row.  Pass ONLY cheap
-    expressions: a column reference, a literal, or an aggregate output
-    (the planner dedupes identical aggregate expressions).  For an
-    EXPENSIVE expression (array ops, HOF folds, regex), STAGE it into a
-    named column in its own projection first and round the reference:
-
-        staged = df.withColumn("_raw", expensive)
-        staged.select(duck_round_expr("_raw", 6).alias(...))
-
-    CollapseProject will NOT merge the two projections (it refuses to
-    duplicate a non-cheap expression referenced more than once,
-    plan-tested in tests/test_plans.py), so the expensive input is
-    evaluated exactly once, inside whole-stage codegen.  The round-10
-    regression shipped unstaged expensive args (q146's plan ran 50
-    array_intersect instead of 5); a round-11 interim fix bound the
-    argument via transform(array(v), ...)[0] — single-eval but
-    CodegenFallback, and the interpreted HOF evaluation measurably
-    poisoned the whole session's interpreted paths (q191-after-q146 at
-    sf100: 512 s vs 112 s with codegen rounding, 4.6x, reproduced
-    A/B) — so the codegen inline form + call-site staging is the
-    contract.  Guarded by the plan-budget gate in tests/test_plans.py.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    # Construction fast path (round 13): each Column op is a ~0.25 ms
-    # py4j round trip and this tree has ~20 of them, re-paid on every
-    # call (~125 call sites across the catalog).  A SQL scalar function
-    # registered once per session is analyzer-INLINED into the exact
-    # same expression tree (the parameter binds as a staged projection,
-    # which also enforces the cheap-argument contract mechanically), so
-    # one call_function round trip replaces the whole build.  Plan
-    # parity vs the Column-built form is pinned in tests; the Column
-    # form remains as the no-active-session fallback.
-    spark = SparkSession.getActiveSession()
-    if spark is not None and _ensure_duck_round_fn(spark):
-        return F.call_function(
-            _DUCK_ROUND_FN, c, F.lit(float(10.0 ** d))
-        )
-    return _duck_round_column(c, d)
-
-
-def _duck_round_column(c: Column, d: int) -> Column:
-    """Column-built duck_round tree (the pre-round-13 form; fallback when
-    no active session can hold the SQL function registration)."""
-    c = c.cast("double")
-    p = F.lit(float(10.0 ** d))
-    v = c * p
-    f = F.floor(v).cast("double")
-    frac = v - f
-    rounded = F.when(
-        (frac > 0.5) | ((frac == 0.5) & (v > 0.0)), f + 1.0
-    ).otherwise(f)
-    return (
-        F.when(F.isnan(v) | (F.abs(v) >= F.lit(2.0 ** 52)), v)
-        .otherwise(rounded)
-        / p
-    )
-
-
-_DUCK_ROUND_FN = "__duck_round"
-# body mirrors _duck_round_column exactly (v = cast(x as double) * p):
-# same when/otherwise branch order, same literals, same NULL and NaN
-# propagation — pinned plan-identical (modulo attribute names) in tests
-_DUCK_ROUND_BODY = (
-    "CASE WHEN isnan((cast(x as double) * p))"
-    " OR abs((cast(x as double) * p)) >= 4.503599627370496E15"
-    " THEN (cast(x as double) * p)"
-    " ELSE CASE WHEN (((cast(x as double) * p)"
-    " - cast(floor((cast(x as double) * p)) as double)) > 0.5D)"
-    " OR ((((cast(x as double) * p)"
-    " - cast(floor((cast(x as double) * p)) as double)) = 0.5D)"
-    " AND ((cast(x as double) * p) > 0D))"
-    " THEN cast(floor((cast(x as double) * p)) as double) + 1.0D"
-    " ELSE cast(floor((cast(x as double) * p)) as double) END END / p"
-)
-_DUCK_ROUND_REGISTERED: set[str] = set()
-
-
-def _ensure_duck_round_fn(spark: SparkSession) -> bool:
-    """Register the __duck_round SQL function once per session.  Keyed by
-    the JVM session object's identity hash (a restarted session under the
-    same Python wrapper re-registers).  Returns False when registration
-    fails (e.g. a connect-only surface without SQL-UDF support) so the
-    caller falls back to the Column build."""
-    try:
-        key = str(spark._jsparkSession.hashCode())  # type: ignore[union-attr]
-    except Exception:  # pragma: no cover — connect session: no _jsparkSession
-        key = str(id(spark))
-    if key in _DUCK_ROUND_REGISTERED:
-        return True
-    try:
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {_DUCK_ROUND_FN}"
-            f"(x DOUBLE, p DOUBLE) RETURNS DOUBLE RETURN {_DUCK_ROUND_BODY}"
-        )
-    except Exception:  # pragma: no cover — engines without SQL UDFs
-        return False
-    _DUCK_ROUND_REGISTERED.add(key)
-    return True
 
 
 def mmr_rerank(

@@ -20,6 +20,8 @@ import zlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import duck_round_expr
+
 # Tiny function-word marker sets for the language-ID heuristic.  A real
 # deployment would plug a fastText-style model in via pandas UDF; the
 # heuristic keeps the operator deterministic and dependency-free.
@@ -34,20 +36,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 # A BPE-ish word/number/punctuation splitter: runs of letters, runs of
 # digits, or single non-space symbols — a cheap proxy for subword counts.
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def _dre():
-    """similarity.duck_round_expr via a call-time import (text is a leaf
-    of the dedup -> similarity chain).  Double roundings that must
-    hash-match DuckDB ROUND route through it; at d=0 the two spellings
-    are provably identical, so oracle-matched catalog outputs use
-    duck_round_expr uniformly while purely-internal integer
-    quantizations may keep F.round."""
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        duck_round_expr,
-    )
-
-    return duck_round_expr
 
 
 def normalize_text(col: Column) -> Column:
@@ -265,12 +253,6 @@ def compression_ratio(df: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql.functions import pandas_udf
 
-    # function-level import: similarity -> dedup -> text would cycle at
-    # module scope
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        duck_round_expr,
-    )
-
     # functional form: `from __future__ import annotations` stringifies
     # the pd.Series hints, which the decorator cannot resolve here
     compressed_len = pandas_udf(
@@ -410,7 +392,7 @@ def repetition_signals(
     )
 
     def dup_frac(n: Column, nd: Column) -> Column:
-        return F.when(n > 0, _dre()(1.0 - nd / n, 6))
+        return F.when(n > 0, duck_round_expr(1.0 - nd / n, 6))
 
     return per_doc.select(
         F.col(id_col),
@@ -418,7 +400,7 @@ def repetition_signals(
         dup_frac(F.col("n_tokens"), F.col("nd_tok")).alias("dup_token_frac"),
         dup_frac(F.col("n_g2"), F.col("nd_g2")).alias("dup_2gram_frac"),
         dup_frac(F.col("n_g3"), F.col("nd_g3")).alias("dup_3gram_frac"),
-        _dre()(F.col("top_token_count") / F.col("n_tokens"), 6).alias(
+        duck_round_expr(F.col("top_token_count") / F.col("n_tokens"), 6).alias(
             "top_token_frac"
         ),
     )
@@ -498,7 +480,7 @@ def model_quality_score(
     return scored.select(
         F.col(id_col),
         "n_tokens",
-        _dre()(F.col("_prob"), 6).alias("quality_score"),
+        duck_round_expr(F.col("_prob"), 6).alias("quality_score"),
     )
 
 

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import exact_str_double
+
 
 def sketch_profile(
     df: DataFrame,
@@ -492,10 +494,6 @@ def rfm_segments(
     64-bit long wraps at the 100 TB posture) and convert via the exact
     decimal-string route.
     """
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-        exact_str_double,
-    )
-
     if not isinstance(n_buckets, int) or n_buckets < 2:
         raise ValueError(
             f"rfm_segments: n_buckets must be an int >= 2, got {n_buckets!r}"
@@ -861,9 +859,6 @@ def twap(
     ]
     if missing:
         raise ValueError(f"twap: input lacks columns {missing}")
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-        exact_str_double,
-    )
 
     e = df.select(
         group_col,
@@ -948,9 +943,6 @@ def time_decay_attribution(
         raise ValueError(
             f"time_decay_attribution: input lacks columns {missing}"
         )
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-        exact_str_double,
-    )
 
     horizon_us = horizon_days * 86_400_000_000
     ts_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
@@ -1018,9 +1010,6 @@ def winsorized_stats(
     missing = [c for c in (group_col, value_col) if c not in df.columns]
     if missing:
         raise ValueError(f"winsorized_stats: input lacks columns {missing}")
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-        exact_str_double,
-    )
 
     c = df.select(
         group_col,

@@ -331,7 +331,11 @@ def distributed_ntile(
     """
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
-    tmp = f"__dntile_rn_{out_col}"
+    # a fixed internal name: out_col comes from metadata and may hold any
+    # characters, and the rank column is rendered into SQL text below
+    tmp = "__dntile_rn"
+    if tmp in df.columns:
+        raise ValueError(f"distributed_ntile: input already has column {tmp!r}")
     ranked, total = distributed_row_number(
         df, order_by, rn_col=tmp, num_partitions=num_partitions
     )

@@ -16,14 +16,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round_expr,
+    exact_str_double,
+)
 from ominimo_dynamic_data_pipeline_spark.functions.sketches import CountMinSketch
 from ominimo_dynamic_data_pipeline_spark.llm.text import tokens
 from ominimo_dynamic_data_pipeline_spark.queries.llm import SQL_TOKS
-from ominimo_dynamic_data_pipeline_spark.llm.similarity import duck_round_expr
-from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-    exact_str_double,
-    load_table,
-)
+from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 

@@ -17,13 +17,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round_expr,
+    exact_str_double,
+)
 from ominimo_dynamic_data_pipeline_spark.operators.bloom import (
     bloom_build,
     bloom_prefilter,
 )
 from ominimo_dynamic_data_pipeline_spark.queries.llm import SQL_TOKS
 from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
-from ominimo_dynamic_data_pipeline_spark.llm.similarity import duck_round_expr
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1632,10 +1635,6 @@ _Q200_SCENARIOS = (0, 50, 100, 150, 200, 250)
     """,
 )
 def q200_discount_scenarios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-        exact_str_double,
-    )
-
     li = load_table(spark, sf_dir, "lineitem").select(
         duck_round_expr(F.col("l_extendedprice") * 100).cast("bigint").alias("w")
     )

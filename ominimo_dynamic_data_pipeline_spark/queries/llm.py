@@ -17,15 +17,15 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round_expr,
+    exact_str_double,
+)
 from ominimo_dynamic_data_pipeline_spark.llm import dedup as D
 from ominimo_dynamic_data_pipeline_spark.llm import multimodal as M
 from ominimo_dynamic_data_pipeline_spark.llm import similarity as S
 from ominimo_dynamic_data_pipeline_spark.llm import text as T
-from ominimo_dynamic_data_pipeline_spark.llm.similarity import duck_round_expr
-from ominimo_dynamic_data_pipeline_spark.queries.tables import (
-    exact_str_double,
-    load_table,
-)
+from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -3629,7 +3629,7 @@ def q160_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # F.round (BigDecimal shortest-string HALF_UP) and DuckDB's ROUND
     # (multiply-then-half-away) diverge on boundary doubles — the sf1
     # sweep caught one (0.4146 vs 0.4147); the kernel now applies
-    # DuckDB-exact rounding itself (similarity.duck_round)
+    # DuckDB-exact rounding itself (duck_numeric.duck_round)
     return mmr_rerank(
         pool, e, k=_Q160_K, lambda_=_Q160_LAMBDA,
         sim_round_to=4, score_round_to=4,

@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import duck_round_expr
 from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
-from ominimo_dynamic_data_pipeline_spark.llm.similarity import duck_round_expr
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 

@@ -84,18 +84,3 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
-
-def exact_str_double(col):
-    """Exact integer/decimal -> DOUBLE via the decimal-string route.
-
-    Wide-integer/DECIMAL -> DOUBLE conversion is NOT identically rounded
-    across engines once the value passes 2^53; routing through the exact
-    decimal string lands in strtod, which IS correctly rounded in both.
-    The DuckDB twin is ``CAST(CAST(x AS VARCHAR) AS DOUBLE)``.
-    """
-    from pyspark.sql import Column
-    from pyspark.sql import functions as F
-
-    if not isinstance(col, Column):
-        col = F.col(col)
-    return col.cast("string").cast("double")

@@ -15,12 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ominimo_dynamic_data_pipeline_spark.queries.tables import (
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round_expr,
     exact_str_double,
-    load_table,
 )
+from ominimo_dynamic_data_pipeline_spark.queries.tables import load_table
 from ominimo_dynamic_data_pipeline_spark.streaming import ops as stream_ops
-from ominimo_dynamic_data_pipeline_spark.llm.similarity import duck_round_expr
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import duck_round_expr
 from ominimo_dynamic_data_pipeline_spark.queries import QUERIES
 
 
@@ -889,19 +890,11 @@ def test_expensive_exprs_not_duplicated_in_plan(q, name):
 
 
 def test_duck_round_staging_contract(spark):
-    # duck_round_expr's cheap-argument contract: the rounding tree
-    # references its argument ~10x.  Since round 13 the helper routes
-    # through a session-registered SQL scalar function whose parameter
-    # binding STAGES the argument into its own projection, so even an
-    # unstaged expensive argument evaluates once; the Column-built
-    # fallback (_duck_round_column) still inlines per reference, so
-    # call sites keep staging explicitly (they must stay correct when
-    # the fallback engages).  Both behaviors pinned here.
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        _duck_round_column,
-        duck_round_expr,
-    )
-
+    # duck_round_expr's cheap-argument contract: the rounding body
+    # references its argument many times, but it is a SQL scalar function
+    # whose parameter binding STAGES the argument into its own
+    # projection, so even an unstaged expensive argument evaluates once,
+    # and the analyzer inlines the body (no function call survives).
     df = spark.range(10).select(
         F.array(F.col("id"), F.col("id") + 1).alias("a"),
         F.array(F.col("id")).alias("b"),
@@ -912,51 +905,22 @@ def test_duck_round_staging_contract(spark):
     )
     p = plan_of(staged, "simple")
     assert p.count("array_intersect") == 1, p
-    # SQL-function path: parameter binding auto-stages, single eval
     p_unstaged = plan_of(
         df.select(duck_round_expr(expensive, 6).alias("r")), "simple"
     )
     assert p_unstaged.count("array_intersect") == 1, p_unstaged
     assert "__duck_round" not in p_unstaged  # fully inlined, no UDF call
-    # Column-built fallback: inlines per reference — the reason the
-    # explicit staging at call sites must stay (if Spark ever starts
-    # CSE-ing this, the pattern becomes unnecessary; revisit)
-    p_fallback = plan_of(
-        df.select(_duck_round_column(expensive, 6).alias("r")), "simple"
-    )
-    assert p_fallback.count("array_intersect") > 1
 
 
-def test_duck_round_sql_fn_bit_parity(spark):
-    # The SQL-function body must stay bit-identical to the Column-built
-    # tree on every edge class: NULL, NaN, +/-Inf, signed zero, exact
-    # .5 micro-ties on both sides of zero, the 2^52 integrality cutoff,
-    # subnormals and double extremes.
-    import struct
-
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        _duck_round_column,
-        duck_round_expr,
-    )
-
-    vals = [
-        None, float("nan"), float("inf"), float("-inf"), 0.0, -0.0,
-        0.5e-6, 1.5e-6, -0.5e-6, -1.5e-6, 2.0 ** 52, 2.0 ** 52 + 2,
-        1234.4999995, -1234.4999995, 0.1234565, 0.1234575, 5e-324,
-        1.7976931348623157e308, 123456.789, -0.9999995,
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], schema="v double")
-
-    def bits(rows):
-        return [
-            "NULL" if r.r is None else struct.pack("<d", r.r).hex()
-            for r in rows
-        ]
-
-    for d in (0, 4, 6):
-        got = bits(df.select(duck_round_expr(F.col("v"), d).alias("r")).collect())
-        want = bits(df.select(_duck_round_column(F.col("v"), d).alias("r")).collect())
-        assert got == want, (d, list(zip(vals, got, want)))
+def test_duck_round_expr_reregisters_dropped_function(spark):
+    # registration follows the session's catalog, not a process-global
+    # memo: once the temporary function is dropped, the next build puts
+    # it back instead of emitting a call the analyzer cannot resolve
+    df = spark.createDataFrame([(1.2345,), (-0.4,)], "v double")
+    assert df.select(duck_round_expr("v", 2).alias("r")).collect()
+    spark.sql("DROP TEMPORARY FUNCTION __duck_round")
+    rows = df.select(duck_round_expr("v", 2).alias("r")).collect()
+    assert [r.r for r in rows] == [1.23, -0.4]
 
 
 def test_sql_rendered_ladders_match_column_built_plans(spark):

@@ -10,6 +10,11 @@ from hypothesis import HealthCheck, given, settings
 from pyspark.sql import functions as F
 from hypothesis import strategies as st
 
+from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
+    duck_round,
+    duck_round_cutoff,
+    duck_round_expr,
+)
 from ominimo_dynamic_data_pipeline_spark.operators.validate import apply_validations
 
 RULES = [
@@ -1463,17 +1468,15 @@ def test_duck_round_expr_matches_duckdb_bit_for_bit(spark):
     the shortest decimal string) diverges.  Adversarial values: for each
     scale, integers-plus-half divided back by 10^d, nudged ±2 ulps so
     the multiply lands just above / on / below the tie, plus seeded
-    uniform values, NaN/inf/NULL and the 2^52 integral threshold."""
+    uniform values, NaN/inf/NULL, the 2^52 integral threshold, signed
+    zeros, subnormals, x * 10^d overflowing to inf (DuckDB returns x),
+    and negatives just inside a half (v - floor(v) rounds up to 0.5
+    there).  The scalar twin duck_round must agree bit for bit too."""
     import math
     import random
     import struct as _struct
 
     import duckdb
-
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        duck_round,
-        duck_round_expr,
-    )
 
     def nudge(x: float, ulps: int) -> float:
         for _ in range(abs(ulps)):
@@ -1495,6 +1498,12 @@ def test_duck_round_expr_matches_duckdb_bit_for_bit(spark):
         (float("nan"), 2), (float("inf"), 2), (float("-inf"), 2),
         (None, 2), (2.0 ** 52, 2), (2.0 ** 53, 4), (1e300, 6), (0.0, 0),
         (-0.5, 0), (0.5, 0), (2.5, 0), (-2.5, 0),
+        (1.7976931348623157e308, 6), (-1.7976931348623157e308, 6),
+        (1e303, 6), (-1e303, 6), (-0.0, 2), (-0.4, 0), (-1e-07, 6),
+        (-0.49999999999999994, 0), (0.49999999999999994, 0),
+        (5e-324, 0), (-5e-324, 6), (2.0 ** 52 + 2, 0),
+        (1234.4999995, 6), (-1234.4999995, 6), (0.5e-6, 6), (-0.5e-6, 6),
+        (-0.9999995, 6), (1.5e-6, 6), (-1.5e-6, 6),
     ]
     rows = [(i, x, d) for i, (x, d) in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, x double, d int")
@@ -1506,18 +1515,17 @@ def test_duck_round_expr_matches_duckdb_bit_for_bit(spark):
         for r in part.collect():
             got[r["id"]] = r["r"]
     con = duckdb.connect()
+
+    def bits(v: float | None) -> str:
+        if v is None or math.isnan(v):
+            return repr(v)
+        return _struct.pack("<d", v).hex()
+
     for i, (x, d) in enumerate(vals):
         exp = con.execute("SELECT round(?::DOUBLE, ?)", [x, d]).fetchone()[0]
-        g = got[i]
-        assert (g is None) == (exp is None), (x, d, g, exp)
-        if g is None:
-            continue
-        if math.isnan(g) and math.isnan(exp):
-            continue
-        assert _struct.pack("<d", g) == _struct.pack("<d", exp), (x, d, g, exp)
-        # and the scalar twin agrees with the Column form
-        if x is not None and not math.isnan(x) and math.isfinite(x) and abs(x * 10.0 ** d) < 2.0 ** 52:
-            assert duck_round(x, d) == g
+        assert bits(got[i]) == bits(exp), (x, d, got[i], exp)
+        if x is not None:
+            assert bits(duck_round(x, d)) == bits(exp), (x, d, exp)
 
 
 def test_duck_round_cutoff_exact_preimage():
@@ -1529,11 +1537,6 @@ def test_duck_round_cutoff_exact_preimage():
     assert; it must mean keep-all)."""
     import random
     import struct as _struct
-
-    from ominimo_dynamic_data_pipeline_spark.llm.similarity import (
-        duck_round,
-        duck_round_cutoff,
-    )
 
     def prev_double(x: float) -> float:
         b = _struct.unpack("<q", _struct.pack("<d", x))[0]

@@ -295,6 +295,28 @@ def test_distributed_ntile_matches_window_ntile(spark, nb):
     assert _sorted_rows(got, cols) == _sorted_rows(ref, cols)
 
 
+@pytest.mark.parametrize("out_col", ["my bucket", "b`x"])
+def test_distributed_ntile_accepts_any_output_name(spark, out_col):
+    from pyspark.sql.window import Window
+
+    df = _rank_fixture(spark, n=101)
+    order = [F.asc("k"), F.asc("id")]
+    ref = df.select(
+        "*", F.ntile(4).over(Window.orderBy(*order)).alias("b")
+    )
+    got = scale.distributed_ntile(df, 4, order, out_col=out_col)
+    assert got.columns == ["id", "k", "v", out_col]
+    got = got.toDF("id", "k", "v", "b")
+    cols = ["id", "k", "v", "b"]
+    assert _sorted_rows(got, cols) == _sorted_rows(ref, cols)
+
+
+def test_distributed_ntile_rejects_internal_rank_column(spark):
+    df = _rank_fixture(spark, n=10).withColumn("__dntile_rn", F.lit(1))
+    with pytest.raises(ValueError, match="__dntile_rn"):
+        scale.distributed_ntile(df, 2, [F.asc("id")])
+
+
 def test_distributed_ntile_rejects_nonpositive_buckets(spark):
     df = _rank_fixture(spark, n=10)
     with pytest.raises(ValueError, match="n_buckets"):

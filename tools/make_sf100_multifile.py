@@ -49,7 +49,7 @@ DST = Path(__file__).resolve().parent.parent / "testdata_sf100_mf"
 # re-layout used 8 files for the small tables and q197 ran 2.2x slower
 # than single-file PURELY from 8-way parallelism on 32 cores
 # (116.9 vs 54.2 s isolated A/B); 64 files restores >= 2 waves.
-# Keys mirror the generators' write order.
+# Keys mirror the write order of `tools/make_sf1.py sf100 sf100_text`.
 FILES = {
     "lineitem": (64, "l_orderkey"),
     "orders": (64, "o_orderkey"),

@@ -1,7 +1,7 @@
 """Heavy-tail soak runner: time the named catalog queries once each
 against a scale directory, under AUTO-POSTURE (zero env knobs — the
 session derives shuffle width and state-store provider from the
-dataset's on-disk bytes; tools/make_sf100.py generates the data).
+dataset's on-disk bytes; `tools/make_sf1.py <decade>` generates the data).
 
     python tools/soak_heavy.py <sf_dir> <query> [query ...]
 

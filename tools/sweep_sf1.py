@@ -9,9 +9,10 @@ as a one-command gate so any oracle edit can re-stamp it.
 What it does beyond a plain ``oracle_check.py`` run:
 
   * points the comparison at the sf1 decade
-    (``/root/repo/testdata_sf1`` by default — gitignored, regenerated
-    per fresh container via ``tools/make_sf1.py``; this script errors
-    loudly with that recipe if the directory is missing);
+    (``testdata_sf1`` at the repo root by default — gitignored,
+    regenerated per fresh container via ``tools/make_sf1.py``, whose
+    default decade is sf1; this script errors loudly with that recipe if
+    the directory is missing);
   * exports ``SPARK_GRAFT_ORACLE_SF_DIR`` into the child process
     BEFORE the package imports, so the data-derived literal oracles
     (IVF/SemDeDup centroid matrices, q44/q91/q94/q129) are re-rendered
