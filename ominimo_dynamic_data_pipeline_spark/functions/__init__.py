@@ -1,6 +1,5 @@
 from ominimo_dynamic_data_pipeline_spark.functions.registry import (
     build_function_column,
-    register_function,
 )
 
-__all__ = ["build_function_column", "register_function"]
+__all__ = ["build_function_column"]

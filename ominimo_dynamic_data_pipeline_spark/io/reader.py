@@ -25,74 +25,58 @@ from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CSV_DEFAULTS = {
-    "header": "true",
-    "sep": ",",
-    "quote": '"',
-    "escape": '"',
-    "multiLine": "false",
-    "encoding": "UTF-8",
+# format -> (Spark data source, default options, honours a declared schema)
+_FORMATS: dict[str, tuple[str, dict[str, str], bool]] = {
+    "json": ("json", {}, True),
+    "csv": (
+        "csv",
+        {
+            "header": "true",
+            "sep": ",",
+            "quote": '"',
+            "escape": '"',
+            "multiLine": "false",
+            "encoding": "UTF-8",
+        },
+        True,
+    ),
+    "parquet": ("parquet", {}, True),
+    "orc": ("orc", {}, True),
+    # one row per line (column ``value``); wholetext=true via options reads
+    # one row per file — raw-corpus ingestion for the text ops
+    "text": ("text", {}, False),
+    # native XML source (Spark >= 4.0): one row per ``rowTag`` element;
+    # nested elements land as structs/arrays and flow straight into
+    # normalize_fields' recursive flattening
+    "xml": ("xml", {"rowTag": "row"}, True),
+    # multimodal ingestion: (path, modificationTime, length, content) rows;
+    # narrow with options.pathGlobFilter (e.g. "*.jpg")
+    "binaryfile": ("binaryFile", {}, False),
 }
 
 
 def read_source(spark: SparkSession, source: Mapping[str, Any]) -> DataFrame:
     """Read one source spec ``{name, path, format, schema?, options?}``.
 
-    ``format`` is case-insensitive: JSON (json-lines), CSV, PARQUET.
-    ``path`` may be a string (globs allowed) or a list of paths.
+    ``format`` is case-insensitive (a key of ``_FORMATS``).  ``path`` may
+    be a string (globs allowed) or a list of paths.  ``schema`` is a DDL
+    string; text and binaryfile sources have fixed schemas and ignore it.
     """
     fmt = str(source.get("format", "parquet")).strip().lower()
+    if fmt not in _FORMATS:
+        raise ValueError(f"Unsupported source format: {source.get('format')!r}")
+    data_source, defaults, takes_schema = _FORMATS[fmt]
     path = source["path"]
-    paths = path if isinstance(path, list) else [path]
-    schema = source.get("schema")  # DDL string, optional
-    options = dict(source.get("options") or {})
-
-    if fmt == "json":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.json(paths)
-    if fmt == "csv":
-        opts = dict(_CSV_DEFAULTS)
-        opts.update(options)
-        reader = spark.read.options(**opts)
-        if schema:
-            reader = reader.schema(schema)
-        else:
-            # Without a declared schema, fall back to inference (reference
-            # behavior) — costs an extra scan; declare schemas at scale.
-            reader = reader.option("inferSchema", "true")
-        return reader.csv(paths)
-    if fmt == "parquet":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.parquet(*paths)
-    if fmt == "orc":
-        reader = spark.read.options(**options)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.orc(*paths)
-    if fmt == "text":
-        # One row per line (column ``value``); wholetext=true via options
-        # reads one row per file — raw-corpus ingestion for the text ops.
-        reader = spark.read.options(**options)
-        return reader.text(paths)
-    if fmt == "xml":
-        # Native XML source (Spark >= 4.0): one row per ``rowTag`` element,
-        # schema inferred unless declared.  rowTag defaults to "row" here so
-        # metadata stays minimal; nested elements land as structs/arrays and
-        # flow straight into normalize_fields' recursive flattening.
-        opts = {"rowTag": "row", **options}
-        reader = spark.read.format("xml").options(**opts)
-        if schema:
-            reader = reader.schema(schema)
-        return reader.load(paths)
-    if fmt == "binaryfile":
-        # Multimodal ingestion: (path, modificationTime, length, content)
-        # rows; narrow with options.pathGlobFilter (e.g. "*.jpg").
-        return spark.read.format("binaryFile").options(**options).load(paths)
-    raise ValueError(f"Unsupported source format: {source.get('format')!r}")
+    schema = source.get("schema") if takes_schema else None
+    options = {**defaults, **(source.get("options") or {})}
+    if fmt == "csv" and not schema:
+        # Without a declared schema, fall back to inference (reference
+        # behavior) — costs an extra scan; declare schemas at scale.
+        options["inferSchema"] = "true"
+    reader = spark.read.format(data_source).options(**options)
+    if schema:
+        reader = reader.schema(schema)
+    return reader.load(path if isinstance(path, list) else [path])
 
 
 def read_sources(

@@ -31,6 +31,7 @@ from ominimo_dynamic_data_pipeline_spark.functions.duck_numeric import (
     duck_round_cutoff,
     duck_round_expr,
 )
+from ominimo_dynamic_data_pipeline_spark.functions.sql_text import quote_ident
 from ominimo_dynamic_data_pipeline_spark.llm.text import normalize_text, tokens
 
 
@@ -45,7 +46,7 @@ MINHASH_PRIME = 1073741789  # largest prime < 2^30
 _PERSISTED: dict[str, list[DataFrame]] = {}
 
 
-def _persist_tracked(op: str, *frames: DataFrame):
+def persist_tracked(op: str, *frames: DataFrame):
     """MEMORY_AND_DISK-persist ``frames`` under the operator's registry
     slot, releasing the previous call's frames for the same operator.
 
@@ -53,7 +54,8 @@ def _persist_tracked(op: str, *frames: DataFrame):
     unpersisted inside the operator (the caller has not executed the
     frame yet); one-generation-per-operator bounds the cache instead,
     and sessions wanting tighter control call release_persisted() after
-    materializing results."""
+    materializing results.  Operators outside this module use it for the
+    same bounded-cache discipline, under their own ``op`` slot."""
     from pyspark import StorageLevel
 
     for old in _PERSISTED.pop(op, []):
@@ -64,15 +66,6 @@ def _persist_tracked(op: str, *frames: DataFrame):
     out = [f.persist(StorageLevel.MEMORY_AND_DISK) for f in frames]
     _PERSISTED[op] = list(out)
     return out[0] if len(out) == 1 else tuple(out)
-
-
-def persist_tracked(op: str, *frames: DataFrame):
-    """Public form of the one-generation tracked persist: persist
-    ``frames`` MEMORY_AND_DISK under ``op``'s registry slot (releasing
-    the previous generation) — for callers OUTSIDE this module that
-    want the same bounded-cache discipline the dedup operators use.
-    Pair with release_persisted(op) after materializing results."""
-    return _persist_tracked(op, *frames)
 
 
 def release_persisted(op: str | None = None) -> int:
@@ -175,23 +168,17 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def _ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier (embedded backticks
-    doubled), safe to splice into rendered SQL for any column name."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _tokens_sql(src: str) -> str:
     """Spark-SQL rendering of text.tokens() over column ``src`` (same
     expression tree; construction-latency note at _md5_long_sql)."""
-    norm = f"regexp_replace(trim(lower({_ident(src)})), '\\\\s+', ' ')"
+    norm = f"regexp_replace(trim(lower({quote_ident(src)})), '\\\\s+', ' ')"
     return f"filter(split({norm}, '\\\\s+'), t -> t != '')"
 
 
 def _shingles_sql(toks: str, n: int) -> str:
     """Spark-SQL rendering of shingles_from_tokens over attribute
     ``toks`` (same expression tree; see _md5_long_sql)."""
-    toks = _ident(toks)
+    toks = quote_ident(toks)
     parts = ", ".join(f"element_at({toks}, i + {j + 1})" for j in range(n))
     grams = (
         f"transform(sequence(0, greatest(size({toks}) - {n}, -1)),"
@@ -220,10 +207,10 @@ def shingle_frame(
     SQL-rendered ladders (construction-latency note at _md5_long_sql);
     plans pinned identical to the Column-built form in tests."""
     toks = df.selectExpr(
-        _ident(id_col), f"{_tokens_sql(text_col)} AS toks"
+        quote_ident(id_col), f"{_tokens_sql(text_col)} AS toks"
     ).filter(F.size(F.col("toks")) >= n)
     return toks.selectExpr(
-        _ident(id_col), f"{_shingles_sql('toks', n)} AS sh"
+        quote_ident(id_col), f"{_shingles_sql('toks', n)} AS sh"
     )
 
 
@@ -335,7 +322,7 @@ def minhash_signatures(
         # optimized plan pinned identical to the Column-built form)
         hashed = shingles.select(
             F.col(id_col), F.explode("sh").alias("_sg")
-        ).selectExpr(_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
+        ).selectExpr(quote_ident(id_col), f"{_md5_long_sql('_sg')} AS _h")
         lo_sql = f"(_h & {(1 << 30) - 1})"
         return hashed.groupBy(id_col).agg(
             *[
@@ -443,7 +430,7 @@ def expand_member_pairs(
         # upstream pipeline (tokenize + hash + collect_list) a second
         # time when it executes.  One generation kept per operator;
         # release_persisted() drops it deterministically.
-        grouped = _persist_tracked("expand_member_pairs", grouped)
+        grouped = persist_tracked("expand_member_pairs", grouped)
         hist = [
             (r["n"], r["buckets"])
             for r in grouped.select(F.size(F.col(members_col)).alias("n"))
@@ -728,7 +715,7 @@ def simhash_frame(
     hash_exprs = [f"{_md5_long_sql('_t', seed=101)} AS _h1"]
     if bits > 60:
         hash_exprs.append(f"{_md5_long_sql('_t', seed=202)} AS _h2")
-    hashed = toks.selectExpr(_ident(id_col), *hash_exprs)
+    hashed = toks.selectExpr(quote_ident(id_col), *hash_exprs)
 
     def sign_sum(i: int) -> Column:
         src, off = ("_h1", i) if i < 60 else ("_h2", i - 60)
@@ -744,7 +731,7 @@ def simhash_frame(
         for i in range(bits)
     )
     return sums.selectExpr(
-        _ident(id_col), f"(cast(0 as bigint) + {sig}) AS sig"
+        quote_ident(id_col), f"(cast(0 as bigint) + {sig}) AS sig"
     )
 
 
@@ -801,7 +788,7 @@ def simhash_near_dups(
         # persist the banded signatures once instead of hashing every
         # token twice (one generation kept per operator;
         # release_persisted() drops it deterministically).
-        banded = _persist_tracked("simhash_near_dups", banded)
+        banded = persist_tracked("simhash_near_dups", banded)
     pre = banded.groupBy("band", "bits").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col(id_col).alias("id"), "sig"))
@@ -993,62 +980,6 @@ def embedding_near_dups(
         )
         .filter(F.col("cos") >= threshold)
     )
-
-
-def embedding_near_dups_blas(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Brute-force embedding near-dup pairs via an Arrow-batched numpy
-    kernel (mapInPandas) — the fast path for the all-pairs baseline.
-
-    TEST/VERIFICATION BASELINE ONLY — this collects the full corpus to the
-    driver and closes over it, which presumes the corpus fits one machine.
-    The catalog / 100 TB path is similarity.embedding_near_dups_lsh
-    (per-bucket Arrow kernel, no driver collect); the Catalyst twin is
-    embedding_near_dups(bucket_col=...).  Sums are accumulated
-    dimension-by-dimension (vectorized across pairs), which is bit-identical
-    to the sequential fold both the Catalyst path and the DuckDB oracle
-    compute — same doubles, ~15x less wall clock than the interpreted
-    higher-order functions (sf0.1: 30 s -> ~2 s).
-    """
-    import numpy as np
-
-    id_field = df.schema[id_col].dataType.simpleString()
-    pdf_all = df.select(id_col, vec_col).toPandas()
-    ids_all = pdf_all[id_col].to_numpy()
-    x_all = np.stack(pdf_all[vec_col].to_numpy()).astype(np.float64)
-    n, dim = x_all.shape
-    acc = np.zeros(n)
-    for d in range(dim):
-        acc += x_all[:, d] * x_all[:, d]
-    nrm_all = np.sqrt(acc)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids_b = pdf[id_col].to_numpy()
-            x_b = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            acc_b = np.zeros(len(ids_b))
-            dots = np.zeros((len(ids_b), n))
-            for d in range(dim):
-                acc_b += x_b[:, d] * x_b[:, d]
-                dots += np.outer(x_b[:, d], x_all[:, d])
-            cos = dots / np.outer(np.sqrt(acc_b), nrm_all)
-            ia, ib = np.nonzero(
-                (ids_b[:, None] < ids_all[None, :]) & (cos >= threshold)
-            )
-            yield pd.DataFrame(
-                {"id_a": ids_b[ia], "id_b": ids_all[ib], "cos": cos[ia, ib]}
-            )
-
-    schema = f"id_a {id_field}, id_b {id_field}, cos double"
-    return df.select(id_col, vec_col).mapInPandas(kernel, schema)
 
 
 def dedup_clusters(
@@ -1415,7 +1346,7 @@ def incremental_near_dedup(
     the tiny candidate list back to per-side shingle frames; cost stays
     sum over buckets of |batch bucket| x |reference bucket|, with
     ``max_bucket_size`` shedding degenerate buckets per corpus side."""
-    sh_inc, sh_ref = _persist_tracked(
+    sh_inc, sh_ref = persist_tracked(
         "incremental_near_dedup",
         shingle_frame(incoming, id_col, text_col, shingle_n),
         shingle_frame(reference, id_col, text_col, shingle_n),
@@ -1555,7 +1486,7 @@ def shingle_join_candidates(
     tagged = posts.withColumn("_df", F.count(F.lit(1)).over(w))
     rare = tagged.filter(F.col("_df") <= max_df)
     if max_pairs is not None:
-        rare = _persist_tracked("shingle_join_candidates", rare)
+        rare = persist_tracked("shingle_join_candidates", rare)
         hist = [
             (r["n"], r["grams"])
             for r in rare.groupBy(F.col("_df").alias("n"))
@@ -1616,7 +1547,7 @@ def containment_near_dups(
     documents); never explode an un-persisted shingle_frame.
     """
     if cache_shingles:
-        sh = _persist_tracked(
+        sh = persist_tracked(
             "containment_near_dups",
             shingle_frame(df, id_col, text_col, shingle_n),
         )

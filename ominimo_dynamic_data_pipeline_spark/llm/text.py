@@ -105,15 +105,6 @@ def quality_features(
     )
 
 
-def language_scores(col: Column) -> dict[str, Column]:
-    """Marker-hit counts per language for the given text column."""
-    toks = tokens(col)
-    return {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: the language with the most distinct marker
     hits; deterministic tie-break by fixed language order; 'und' when no

@@ -55,7 +55,6 @@ class CompileContext:
     frames: dict[str, DataFrame] = field(default_factory=dict)
     deferred_stats: list[StatsRequest] = field(default_factory=list)
     clock: Column | None = None  # fixed-clock override for determinism
-    strict: bool = True
     register_views: bool = True
 
     def get(self, name: str) -> DataFrame:
@@ -391,7 +390,7 @@ BINDINGS: dict[str, Binding] = {b.op: b for b in (
 def _op_validate(ctx: CompileContext, step: Mapping[str, Any]) -> None:
     params = step.get("params", {})
     result = validate.apply_validations(
-        ctx.get(params["input"]), params.get("validations", []), strict=ctx.strict
+        ctx.get(params["input"]), params.get("validations", [])
     )
     ctx.put(params.get("ok_output", f"{step['name']}_ok"), result.ok)
     ctx.put(params.get("ko_output", f"{step['name']}_ko"), result.ko)

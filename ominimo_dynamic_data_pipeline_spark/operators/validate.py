@@ -1,20 +1,28 @@
 """Declarative field-validation rule language.
 
 Re-expresses the reference's rule language (``/root/reference/src/validator.py:19-110``)
-with identical semantics and error labels, as pure Catalyst expressions —
-no UDFs, one projection, one codegen'd predicate.
+with identical semantics and error labels.  Every check is one row of
+``RULES``: an argument parser, a pass condition written as a Spark SQL
+template, and an error-label template — the SURVEY.md §2.3 table in code.
+``tag_validations`` renders the whole rule set into two SQL expressions
+(the verdict and the error array) added in one projection: no UDFs, one
+codegen'd predicate, two parser round trips however many checks there are.
 
 Load-bearing semantics pinned by tests (tests/test_validator.py):
   * Null-permissiveness: range/date/pattern checks PASS null values; only
     ``notNull``/``notEmpty`` assert presence.  ``isNumeric``/``isInteger``
     additionally require non-null.
   * Error labels embed the parsed float (``min:18`` -> ``..._at_least_18.0``).
-  * ``dateBefore``/``dateAfter`` are INCLUSIVE (<= / >=) despite the names,
-    and pass when either side is null or only one side parses... no: pass when
-    either side is *null*; fail when both non-null and either fails to parse.
-  * Unknown checks: the reference silently passes them with an
-    ``unknown_validation_*`` label (``validator.py:106-108``); we hard-error
-    by default and reproduce the legacy behavior under ``strict=False``.
+  * ``dateBefore``/``dateAfter`` are INCLUSIVE (<= / >=) despite the names;
+    they pass when either side is null and fail when both are non-null and
+    either does not parse as ``yyyy-MM-dd``.
+  * Unknown checks raise ``ValueError`` (the reference passed them with an
+    ``unknown_validation_*`` label, ``validator.py:106-108``).
+
+Rendering: the field is a dotted struct path with each part backtick-quoted
+(the resolution ``F.col(field)`` gives); patterns, ``inList`` values and
+labels are string literals that parse back to themselves; numeric bounds
+are ``CAST('<repr>' AS DOUBLE)`` so exponents and ``inf`` survive.
 
 Scale notes: validation is a single narrow projection — no shuffle, fully
 whole-stage-codegen'd, safe at any scale.  The OK/KO split is two filters
@@ -26,71 +34,36 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
-from functools import reduce
-from typing import Any, Callable, Mapping, Sequence
+from typing import Any, Callable, Mapping, NamedTuple, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ominimo_dynamic_data_pipeline_spark.functions.sql_text import (
+    quote_ident,
+    quote_string,
+)
 
 ERRORS_COL = "validation_errors"
 VALID_COL = "is_valid"
 
-# A check builder takes (field, arg) and returns (pass-condition, error-label).
-CheckBuilder = Callable[[str, str], tuple[Column, str]]
+
+class _Field(str):
+    """A parsed argument naming another field (rendered as a column)."""
 
 
-def _num(field: str) -> Column:
-    # ANSI-safe: bad data yields null instead of throwing (matches the
-    # reference's try_cast semantics, validator.py:35-63).
-    return F.col(field).try_cast("double")
+def _path(field: str) -> str:
+    return ".".join(quote_ident(part) for part in field.split("."))
 
 
-def _field_col(field: str) -> Column:
-    return F.col(field)
-
-
-def _date(field: str) -> Column:
-    return F.try_to_date(F.col(field), "yyyy-MM-dd")
-
-
-def _check_not_empty(field: str, _: str) -> tuple[Column, str]:
-    c = _field_col(field)
-    return c.isNotNull() & (c != ""), f"{field}:must_be_non_empty"
-
-
-def _check_not_null(field: str, _: str) -> tuple[Column, str]:
-    return _field_col(field).isNotNull(), f"{field}:must_not_be_null"
-
-
-def _check_is_numeric(field: str, _: str) -> tuple[Column, str]:
-    c = _field_col(field)
-    return c.isNotNull() & _num(field).isNotNull(), f"{field}:must_be_numeric"
-
-
-def _check_is_integer(field: str, _: str) -> tuple[Column, str]:
-    c, n = _field_col(field), _num(field)
-    cond = c.isNotNull() & n.isNotNull() & (n == n.try_cast("int"))
-    return cond, f"{field}:must_be_integer"
-
-
-def _check_min(field: str, arg: str) -> tuple[Column, str]:
-    v = float(arg)
-    n = _num(field)
-    cond = _field_col(field).isNull() | (n.isNotNull() & (n >= v))
-    return cond, f"{field}:must_be_at_least_{v}"
-
-
-def _check_max(field: str, arg: str) -> tuple[Column, str]:
-    v = float(arg)
-    n = _num(field)
-    cond = _field_col(field).isNull() | (n.isNotNull() & (n <= v))
-    return cond, f"{field}:must_be_at_most_{v}"
+def _number(field: str, arg: str) -> dict[str, Any]:
+    return {"a": float(arg)}
 
 
 _RANGE_RE = re.compile(r"^\s*(-?\d+(?:\.\d+)?)-(-?\d+(?:\.\d+)?)\s*$")
 
 
-def _check_range(field: str, arg: str) -> tuple[Column, str]:
+def _range(field: str, arg: str) -> dict[str, Any]:
     # regex, not split('-'): a negative lower bound like 'range:-5-10'
     # must parse as (-5, 10), and malformed args must name the field/rule
     # instead of raising a bare float('') ValueError at compile time.
@@ -101,115 +74,139 @@ def _check_range(field: str, arg: str) -> tuple[Column, str]:
             "expected 'min-max' with numeric bounds (negative ok, e.g. "
             "'range:-5-10')"
         )
-    lo, hi = float(m.group(1)), float(m.group(2))
-    n = _num(field)
-    cond = _field_col(field).isNull() | (n.isNotNull() & (n >= lo) & (n <= hi))
-    return cond, f"{field}:must_be_between_{lo}_and_{hi}"
-
-
-def _check_is_date(field: str, _: str) -> tuple[Column, str]:
-    cond = _field_col(field).isNull() | _date(field).isNotNull()
-    return cond, f"{field}:must_be_valid_date"
-
-
-def _check_date_before(field: str, other: str) -> tuple[Column, str]:
-    d, o = _date(field), _date(other)
-    cond = (
-        _field_col(field).isNull()
-        | _field_col(other).isNull()
-        | (d.isNotNull() & o.isNotNull() & (d <= o))
-    )
-    return cond, f"{field}:must_be_before_{other}"
-
-
-def _check_date_after(field: str, other: str) -> tuple[Column, str]:
-    d, o = _date(field), _date(other)
-    cond = (
-        _field_col(field).isNull()
-        | _field_col(other).isNull()
-        | (d.isNotNull() & o.isNotNull() & (d >= o))
-    )
-    return cond, f"{field}:must_be_after_{other}"
-
-
-def _check_pattern(field: str, arg: str) -> tuple[Column, str]:
-    c = _field_col(field)
-    return c.isNull() | c.rlike(arg), f"{field}:must_match_pattern"
-
-
-# --- engine extensions beyond the reference's 12 checks (same
-# null-permissive semantics: only notNull/notEmpty assert presence) -------
-
-_EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
-
-
-def _check_is_email(field: str, _: str) -> tuple[Column, str]:
-    c = _field_col(field)
-    return c.isNull() | c.rlike(_EMAIL_RE), f"{field}:must_be_valid_email"
-
-
-def _check_in_list(field: str, arg: str) -> tuple[Column, str]:
-    values = [v for v in arg.split("|") if v != ""]
-    if not values:
-        raise ValueError(
-            f"invalid inList rule for field '{field}': expected "
-            "'inList:a|b|c' with at least one value"
-        )
-    c = _field_col(field)
-    cond = c.isNull() | c.isin(*values)
-    return cond, f"{field}:must_be_one_of_{'|'.join(values)}"
+    return {"lo": float(m.group(1)), "hi": float(m.group(2))}
 
 
 _LENGTH_RE = re.compile(r"^\s*(\d+)-(\d+)\s*$")
 
 
-def _check_length(field: str, arg: str) -> tuple[Column, str]:
+def _length(field: str, arg: str) -> dict[str, Any]:
     m = _LENGTH_RE.match(arg)
     if m is None:
         raise ValueError(
             f"invalid length rule 'length:{arg}' for field '{field}': "
             "expected 'min-max' with non-negative integer bounds"
         )
-    lo, hi = int(m.group(1)), int(m.group(2))
-    c = _field_col(field)
-    n = F.length(c)
-    cond = c.isNull() | ((n >= lo) & (n <= hi))
-    return cond, f"{field}:length_must_be_between_{lo}_and_{hi}"
+    return {"lo": int(m.group(1)), "hi": int(m.group(2))}
 
 
-# Bare checks (no argument) and prefixed checks ("name:arg").
-_BARE_CHECKS: dict[str, CheckBuilder] = {
-    "notEmpty": _check_not_empty,
-    "notNull": _check_not_null,
-    "isNumeric": _check_is_numeric,
-    "isInteger": _check_is_integer,
-    "isDate": _check_is_date,
-    "isEmail": _check_is_email,
+def _values(field: str, arg: str) -> dict[str, Any]:
+    values = tuple(v for v in arg.split("|") if v != "")
+    if not values:
+        raise ValueError(
+            f"invalid inList rule for field '{field}': expected "
+            "'inList:a|b|c' with at least one value"
+        )
+    return {"a": values}
+
+
+def _other_field(field: str, arg: str) -> dict[str, Any]:
+    return {"a": _Field(arg)}
+
+
+def _text(field: str, arg: str) -> dict[str, Any]:
+    return {"a": arg}
+
+
+class Rule(NamedTuple):
+    # (field, arg) -> template values; None for checks that take no arg
+    parse: Callable[[str, str], dict[str, Any]] | None
+    cond: str  # pass condition over {c} {n} {d} {email} and the values
+    label: str  # error label after "<field>:", over the values
+
+
+_EMAIL_RE = r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$"
+
+
+# {c} the field, {n} the field as a double, {d} the field as a date.  The
+# conditions carry the reference's null guards: a null field or an
+# unparseable value gives TRUE or FALSE.  (isInteger on a number beyond
+# the INT range still gives NULL, whose row lands in neither split.)
+RULES: dict[str, Rule] = {
+    "notEmpty": Rule(None, "{c} IS NOT NULL AND {c} != ''", "must_be_non_empty"),
+    "notNull": Rule(None, "{c} IS NOT NULL", "must_not_be_null"),
+    "isNumeric": Rule(None, "{c} IS NOT NULL AND {n} IS NOT NULL", "must_be_numeric"),
+    "isInteger": Rule(
+        None,
+        "{c} IS NOT NULL AND {n} IS NOT NULL AND {n} = try_cast({n} AS INT)",
+        "must_be_integer",
+    ),
+    "min": Rule(
+        _number,
+        "{c} IS NULL OR ({n} IS NOT NULL AND {n} >= {a})",
+        "must_be_at_least_{a}",
+    ),
+    "max": Rule(
+        _number,
+        "{c} IS NULL OR ({n} IS NOT NULL AND {n} <= {a})",
+        "must_be_at_most_{a}",
+    ),
+    "range": Rule(
+        _range,
+        "{c} IS NULL OR ({n} IS NOT NULL AND {n} >= {lo} AND {n} <= {hi})",
+        "must_be_between_{lo}_and_{hi}",
+    ),
+    "isDate": Rule(None, "{c} IS NULL OR {d} IS NOT NULL", "must_be_valid_date"),
+    "dateBefore": Rule(
+        _other_field,
+        "{c} IS NULL OR {a} IS NULL OR ({d} IS NOT NULL AND"
+        " try_to_date({a}, 'yyyy-MM-dd') IS NOT NULL AND"
+        " {d} <= try_to_date({a}, 'yyyy-MM-dd'))",
+        "must_be_before_{a}",
+    ),
+    "dateAfter": Rule(
+        _other_field,
+        "{c} IS NULL OR {a} IS NULL OR ({d} IS NOT NULL AND"
+        " try_to_date({a}, 'yyyy-MM-dd') IS NOT NULL AND"
+        " {d} >= try_to_date({a}, 'yyyy-MM-dd'))",
+        "must_be_after_{a}",
+    ),
+    "pattern": Rule(_text, "{c} IS NULL OR {c} RLIKE {a}", "must_match_pattern"),
+    # engine extensions beyond the reference's 12 checks (same
+    # null-permissive semantics: only notNull/notEmpty assert presence)
+    "isEmail": Rule(None, "{c} IS NULL OR {c} RLIKE {email}", "must_be_valid_email"),
+    "inList": Rule(_values, "{c} IS NULL OR {c} IN ({a})", "must_be_one_of_{a}"),
+    "length": Rule(
+        _length,
+        "{c} IS NULL OR (length({c}) >= {lo} AND length({c}) <= {hi})",
+        "length_must_be_between_{lo}_and_{hi}",
+    ),
 }
-_PREFIX_CHECKS: dict[str, CheckBuilder] = {
-    "min": _check_min,
-    "max": _check_max,
-    "range": _check_range,
-    "dateBefore": _check_date_before,
-    "dateAfter": _check_date_after,
-    "pattern": _check_pattern,
-    "inList": _check_in_list,
-    "length": _check_length,
-}
 
 
-def build_check(field: str, check: str, strict: bool = True) -> tuple[Column, str]:
-    """Compile one ``(field, check)`` pair into (pass-condition, error-label)."""
-    if check in _BARE_CHECKS:
-        return _BARE_CHECKS[check](field, "")
-    if ":" in check:
-        prefix, arg = check.split(":", 1)
-        if prefix in _PREFIX_CHECKS:
-            return _PREFIX_CHECKS[prefix](field, arg)
-    if strict:
+def _sql(value: Any) -> str:
+    if isinstance(value, _Field):
+        return _path(value)
+    if isinstance(value, str):
+        return quote_string(value)
+    if isinstance(value, float):
+        return f"CAST('{value!r}' AS DOUBLE)"
+    if isinstance(value, int):
+        return str(value)
+    return ", ".join(_sql(v) for v in value)
+
+
+def _label(value: Any) -> str:
+    return "|".join(value) if isinstance(value, tuple) else str(value)
+
+
+def build_check(field: str, check: str) -> tuple[str, str]:
+    """Compile one ``(field, check)`` pair into (SQL pass-condition, label)."""
+    name, sep, arg = check.partition(":")
+    rule = RULES.get(name)
+    if rule is None or (rule.parse is None) == bool(sep):
         raise ValueError(f"Unknown validation check {check!r} for field {field!r}")
-    # Legacy compat: unknown checks always pass, with a marker label.
-    return F.lit(True), f"{field}:unknown_validation_{check}"
+    values = rule.parse(field, arg) if rule.parse else {}
+    c = _path(field)
+    cond = rule.cond.format(
+        c=c,
+        n=f"try_cast({c} AS DOUBLE)",
+        d=f"try_to_date({c}, 'yyyy-MM-dd')",
+        email=quote_string(_EMAIL_RE),
+        **{k: _sql(v) for k, v in values.items()},
+    )
+    label = rule.label.format(**{k: _label(v) for k, v in values.items()})
+    return cond, f"{field}:{label}"
 
 
 @dataclass
@@ -221,36 +218,32 @@ class ValidationResult:
     ko: DataFrame  # failing rows + validation_errors
 
 
-def tag_validations(
-    df: DataFrame, rules: Sequence[Mapping[str, Any]], strict: bool = True
-) -> DataFrame:
+def tag_validations(df: DataFrame, rules: Sequence[Mapping[str, Any]]) -> DataFrame:
     """Add ``is_valid`` and ``validation_errors`` in a single projection.
 
     Validity is the conjunction of every (field, check) condition; the errors
     array holds the label of every failing check, in rule order.
     """
-    compiled: list[tuple[Column, str]] = []
-    for rule in rules:
-        field = rule["field"]
-        for check in rule.get("validations") or []:
-            compiled.append(build_check(field, check, strict=strict))
-
-    if not compiled:
-        return df.withColumn(VALID_COL, F.lit(True)).withColumn(
-            ERRORS_COL, F.array().cast("array<string>")
+    compiled = [
+        build_check(rule["field"], check)
+        for rule in rules
+        for check in rule.get("validations") or []
+    ]
+    if compiled:
+        is_valid = " AND ".join(f"({cond})" for cond, _ in compiled)
+        cases = ", ".join(
+            f"CASE WHEN NOT ({cond}) THEN {quote_string(label)} END"
+            for cond, label in compiled
         )
-
-    is_valid = reduce(lambda a, b: a & b, (c for c, _ in compiled))
-    errors = F.array_compact(
-        F.array(*[F.when(~cond, F.lit(label)) for cond, label in compiled])
-    )
-    return df.withColumn(VALID_COL, is_valid).withColumn(ERRORS_COL, errors)
+        errors = f"array_compact(array({cases}))"
+    else:
+        is_valid, errors = "true", "CAST(array() AS ARRAY<STRING>)"
+    return df.withColumns({VALID_COL: F.expr(is_valid), ERRORS_COL: F.expr(errors)})
 
 
 def apply_validations(
     df: DataFrame,
     rules: Sequence[Mapping[str, Any]],
-    strict: bool = True,
     cache_tagged: bool = False,
 ) -> ValidationResult:
     """Split ``df`` into OK and KO streams per the rule set.
@@ -263,7 +256,7 @@ def apply_validations(
         empty = df.limit(0).withColumn(ERRORS_COL, F.array().cast("array<string>"))
         return ValidationResult(tagged=df, ok=df, ko=empty)
 
-    tagged = tag_validations(df, rules, strict=strict)
+    tagged = tag_validations(df, rules)
     if cache_tagged:
         tagged = tagged.cache()
     ok = tagged.filter(F.col(VALID_COL)).drop(VALID_COL, ERRORS_COL)

@@ -55,7 +55,6 @@ def compile_dataflow(
     dataflow: Mapping[str, Any],
     input_path_override: str | list[str] | None = None,
     clock: Column | None = None,
-    strict: bool = True,
 ) -> CompiledDataflow:
     """Pure compile: read sources (lazy), build the transformation DAG.
 
@@ -69,7 +68,7 @@ def compile_dataflow(
         sources[0]["path"] = input_path_override
         flow["sources"] = sources
 
-    ctx = CompileContext(spark=spark, clock=clock, strict=strict)
+    ctx = CompileContext(spark=spark, clock=clock)
     for name, df in read_sources(spark, flow).items():
         ctx.put(name, df)
     apply_transformations(ctx, flow)

@@ -953,7 +953,7 @@ def _apriori_prefilter(li: DataFrame, support: int) -> DataFrame:
     quadratic expansion instead.
     """
     from ominimo_dynamic_data_pipeline_spark.llm.dedup import (
-        _persist_tracked,
+        persist_tracked,
         release_persisted,
     )
 
@@ -967,7 +967,7 @@ def _apriori_prefilter(li: DataFrame, support: int) -> DataFrame:
     freq = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("_n"))
     # Persisted under the dedup registry slot (released like the other
     # operator intermediates) — the returned lazy result reads it.
-    _persist_tracked("apriori_prefilter", freq)
+    persist_tracked("apriori_prefilter", freq)
     try:
         n_infrequent = freq.filter(F.col("_n") < support).count()
     except Exception:

@@ -432,3 +432,17 @@ def test_bucketed_sink_validation(spark, tmp_path):
         write_sink(df, {**base, "table": "t1",
                         "paths": [str(tmp_path / "a"), str(tmp_path / "b")],
                         "bucketBy": {"buckets": 4, "cols": ["id"]}})
+
+
+def test_unsupported_source_format_raises(spark):
+    with pytest.raises(ValueError, match="Unsupported source format: 'avro'"):
+        read_source(spark, {"name": "x", "path": "unused", "format": "avro"})
+
+
+def test_text_source_ignores_declared_schema(spark, tmp_path):
+    p = tmp_path / "raw.txt"
+    p.write_text("alpha\n")
+    back = read_source(
+        spark, {"name": "x", "path": str(p), "format": "text", "schema": "n int"}
+    )
+    assert back.columns == ["value"]

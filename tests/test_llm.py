@@ -223,29 +223,6 @@ def test_language_id_markers(spark):
     assert out[2] == "und"
 
 
-def test_embedding_near_dups_blas_matches_catalyst(spark):
-    import random
-
-    rnd = random.Random(7)
-    vecs = [
-        (i, [rnd.uniform(-1, 1) for _ in range(16)]) for i in range(60)
-    ]
-    vecs.append((60, [v * 1.0 for v in vecs[0][1]]))  # exact dup of 0
-    df = spark.createDataFrame(
-        vecs, schema="vec_id bigint, embedding array<double>"
-    )
-    a = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in D.embedding_near_dups(df, threshold=0.5).collect()
-    }
-    b = {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in D.embedding_near_dups_blas(df, threshold=0.5).collect()
-    }
-    assert a == b  # bit-identical doubles, same pair set
-    assert (0, 60) in a and math.isclose(a[(0, 60)], 1.0, rel_tol=1e-12)
-
-
 def test_embedding_near_dups_lsh_subset_of_bruteforce(spark):
     import random
 

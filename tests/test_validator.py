@@ -152,15 +152,6 @@ def test_unknown_check_strict_raises():
         build_check("f", "bogusCheck")
 
 
-def test_unknown_check_legacy_passes(spark):
-    df = spark.createDataFrame([("x",)], schema="f string")
-    tagged = tag_validations(
-        df, [{"field": "f", "validations": ["bogusCheck"]}], strict=False
-    )
-    row = tagged.collect()[0]
-    assert row["is_valid"] and list(row["validation_errors"]) == []
-
-
 def test_split_partition_invariants(spark):
     """ok ∪ ko == input, ok ∩ ko == ∅, every KO row has ≥1 error."""
     df = spark.createDataFrame(
@@ -184,3 +175,83 @@ def test_no_rules_returns_input_and_empty_ko(spark):
     assert res.ok.count() == 1
     assert res.ko.count() == 0
     assert "validation_errors" in res.ko.columns
+
+
+def test_field_name_with_space(spark):
+    df = spark.createDataFrame([("5",), ("0",), (None,)], schema="`my field` string")
+    tagged = tag_validations(df, [{"field": "my field", "validations": ["min:1"]}])
+    got = [(r["is_valid"], list(r["validation_errors"])) for r in tagged.collect()]
+    assert got == [
+        (True, []),
+        (False, ["my field:must_be_at_least_1.0"]),
+        (True, []),
+    ]
+
+
+def test_struct_path_field(spark):
+    df = spark.createDataFrame(
+        [(("ABC-123",),), (("abc",),), ((None,),)],
+        schema="vehicle struct<plate: string>",
+    )
+    rules = [{"field": "vehicle.plate", "validations": [r"pattern:^[A-Z]{3}-\d{3}$"]}]
+    got = [
+        (r["is_valid"], list(r["validation_errors"]))
+        for r in tag_validations(df, rules).collect()
+    ]
+    assert got == [
+        (True, []),
+        (False, ["vehicle.plate:must_match_pattern"]),
+        (True, []),
+    ]
+
+
+def test_pattern_with_quote_and_backslash_class(spark):
+    res = _verdicts(spark, ["O'12", "O12", "O'1x", None], r"pattern:^O'\d{2}$")
+    assert [r[0] for r in res] == [True, False, False, True]
+    assert res[1][1] == ["f:must_match_pattern"]
+
+
+def test_in_list_values_with_quote(spark):
+    res = _verdicts(spark, ["O'Brien", "Smith", "OBrien", None], "inList:O'Brien|Smith")
+    assert [r[0] for r in res] == [True, True, False, True]
+    assert res[2][1] == ["f:must_be_one_of_O'Brien|Smith"]
+
+
+def test_min_exponent_bound(spark):
+    res = _verdicts(spark, ["0.00001", "0.000009", "1", None], "min:1e-05")
+    assert [r[0] for r in res] == [True, False, True, True]
+    assert res[1][1] == ["f:must_be_at_least_1e-05"]
+
+
+def test_tag_validations_construction_budget(spark):
+    """Rendering the whole rule set as SQL keeps construction to a handful
+    of gateway round trips, however many checks the rules hold."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    df = spark.createDataFrame([], schema="a string, b string")
+    rules = [
+        {
+            "field": "a",
+            "validations": [
+                "notEmpty", "notNull", "isNumeric", "isInteger", "min:1",
+                "max:9", "range:1-9", "isDate", "dateBefore:b", "dateAfter:b",
+                r"pattern:^\d+$", "isEmail", "inList:x|y", "length:1-5",
+            ],
+        }
+    ]
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    calls = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal calls
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            calls += 1
+        return orig(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        tag_validations(df, rules)
+    finally:
+        client.send_command = orig
+    assert calls <= 40, calls
